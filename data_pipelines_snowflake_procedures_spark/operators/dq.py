@@ -22,9 +22,12 @@ Two engines, mirroring the reference:
 Scale design: every full-column statistic comes from the single-pass
 profile (operators/profile.py). The file engine's per-column and
 per-pair checks are expressed as one unioned DataFrame plan per family
-instead of the reference's O(cols) / O(cols²) separate scans; pair
-count is capped (``max_pairs``) for wide tables, and the z-score pass
-reuses the profile's mean/std rather than rescanning.
+(the ``*_long`` functions below) instead of the reference's O(cols) /
+O(cols²) separate scans; pair count is capped (``max_pairs``) for wide
+tables. The discovery sweep (sources/discovery.py
+``run_file_dq_distributed``) computes all families from one
+grouping-sets value-count cube with a single collect; these per-family
+plans stay as the composable DataFrame API and its parity reference.
 """
 
 from __future__ import annotations
@@ -240,42 +243,25 @@ def completeness_uniqueness_long(df: DataFrame) -> DataFrame:
     return wide.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
 
 
-def zscore_accuracy_long(
-    df: DataFrame,
-    cols: list[str] | None = None,
-    stats: dict[str, tuple[float | None, float | None, int]] | None = None,
-) -> DataFrame:
+def zscore_accuracy_long(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Numeric accuracy: share of values within 3 sample-stddevs of the
     mean (Data_Discovery_File.sql:147-183). Two passes — one for
     mean/std/count, one counting outliers — both full aggregates, no
     per-column scans. ``result`` rounded to 6 for cross-engine hashing.
-
-    ``stats`` lets a caller that already profiled the table (e.g. the
-    file-DQ sweep's fused first pass) supply ``{col: (mean, std, n)}``
-    and skip the stats job entirely.
     """
     schema = {f.name: f.dataType for f in df.schema.fields}
     cols = cols or [c for c in df.columns if is_numeric(schema[c])]
-    if stats is not None:
-        stats_row = {
-            k: v
+    stats_row = df.agg(
+        *[
+            agg
             for c in cols
-            for k, v in zip(
-                (f"{c}__mean", f"{c}__std", f"{c}__n"), stats[c]
+            for agg in (
+                F.avg(c).alias(f"{c}__mean"),
+                F.stddev(c).alias(f"{c}__std"),
+                F.count(F.col(c)).alias(f"{c}__n"),
             )
-        }
-    else:
-        stats_row = df.agg(
-            *[
-                agg
-                for c in cols
-                for agg in (
-                    F.avg(c).alias(f"{c}__mean"),
-                    F.stddev(c).alias(f"{c}__std"),
-                    F.count(F.col(c)).alias(f"{c}__n"),
-                )
-            ]
-        ).collect()[0]
+        ]
+    ).collect()[0]
     outlier_aggs = []
     for c in cols:
         mean, std = stats_row[f"{c}__mean"], stats_row[f"{c}__std"]
@@ -380,7 +366,6 @@ def fd_consistency_long(
     df: DataFrame,
     cols: list[str] | None = None,
     max_pairs: int | None = None,
-    known_unique_cols: set[str] | None = None,
     profile_keylike: bool = False,
 ) -> DataFrame:
     """Pairwise functional-dependency consistency
@@ -400,17 +385,17 @@ def fd_consistency_long(
     c2 value (and the both-non-null FD subset only shrinks that). Such
     pairs are emitted as literal passed rows with ZERO scan work, so an
     N-column table with k key-like columns drops k·(N−1) grouped-agg
-    subplans. Callers that already profiled the table pass the proven
-    set via ``known_unique_cols`` (run_file_dq_distributed does — no
-    extra action); ``profile_keylike=True`` derives it here with one
+    subplans. ``profile_keylike=True`` derives the unique set with one
     extra count/countDistinct pass. Answers are bit-identical either
-    way — the skip is exact, not a heuristic."""
+    way — the skip is exact, not a heuristic. (The file-DQ sweep,
+    sources/discovery.py, needs no pre-filter: its value-count cube
+    judges every pair from the same single pass.)"""
     cols = cols or df.columns
     pairs = [(c1, c2) for c1 in cols for c2 in cols if c1 != c2]
     if max_pairs is not None:
         pairs = pairs[:max_pairs]
-    unique_cols = set(known_unique_cols or ())
-    if profile_keylike and known_unique_cols is None and pairs:
+    unique_cols: set[str] = set()
+    if profile_keylike and pairs:
         determinants = sorted({c1 for c1, _ in pairs})
         prow = df.agg(
             *[F.count(F.col(c)).alias(f"__n_{i}") for i, c in enumerate(determinants)],

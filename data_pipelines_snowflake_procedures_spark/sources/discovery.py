@@ -25,10 +25,10 @@ Spark-first notes:
   unit: Arrow IPC by record batch (sources/arrowipc.py), Avro object
   containers by sync-delimited block (sources/avrofile.py, S14) —
   driver reads headers only, executors seek straight to their slices.
-* The DQ sweep runs on the Spark DataFrame through the distributed
-  rule engines (operators/dq.py) — a handful of aggregate jobs total —
-  instead of whole-file pandas. Full-fidelity rule records
-  (reason strings, pass/fail) are preserved.
+* The DQ sweep runs on the Spark DataFrame as ONE collect over a
+  grouping-sets value-count cube (:func:`run_file_dq_distributed`)
+  instead of whole-file pandas or one Spark action per rule family.
+  Its rule records match the per-family engines in operators/dq.py.
 """
 
 from __future__ import annotations
@@ -163,10 +163,34 @@ def write_any(
     raise ValueError(f"Unsupported write format: {ext!r} ({path})")
 
 
+def _hidden(name: str) -> bool:
+    """Spark's reader rule for files that are not data: ``_SUCCESS``,
+    ``_temporary``, ``.crc`` checksums (``_k=v`` partition dirs count)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _data_size(path: str) -> int | None:
+    """Bytes of data at ``path``: the file's size, or for a dataset
+    directory (what Spark writers produce) the sum of the data files
+    under it. ``None`` if absent."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    if not os.path.isdir(path):
+        return None
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        total += sum(
+            os.path.getsize(os.path.join(root, f)) for f in files if not _hidden(f)
+        )
+    return total
+
+
 def file_metadata(path: str, df: DataFrame, row_count: int | None = None) -> dict:
     """File-definition document (Data_Discovery_File.sql:73-93 shape):
-    name, type, size, row/column counts, palette-typed column list."""
-    size = os.path.getsize(path) if os.path.exists(path) else None
+    name, type, size, row/column counts, palette-typed column list.
+    A directory dataset's size is its data files' (:func:`_data_size`)."""
+    size = _data_size(path)
     return {
         "file_name": os.path.basename(path),
         "file_type": os.path.splitext(path)[1].lstrip(".").lower(),
@@ -180,47 +204,188 @@ def file_metadata(path: str, df: DataFrame, row_count: int | None = None) -> dic
     }
 
 
+#: Spark's grouping-set limit (GROUPING_SIZE_LIMIT_EXCEEDED) is 64 key
+#: columns; one fewer keeps ``grouping_id()`` a non-negative long.
+_CUBE_KEYS = 63
+
+
+class FileDQRules(list):
+    """The rule records of one file-DQ sweep (a plain list), plus the
+    ``row_count`` the sweep counted on the way, so callers need no
+    separate ``df.count()``."""
+
+    row_count: int = 0
+
+
+def _value_count_cube(
+    df: DataFrame,
+    chunk: list[int],
+    deps: dict[int, list[int]],
+    numeric: set[int],
+    strings: set[int],
+) -> DataFrame:
+    """One-row summary of the columns at positions ``chunk`` (see
+    :func:`run_file_dq_distributed`). Output columns are keyed by
+    column position, so the summaries of several chunks cross-join
+    into one row without name clashes."""
+    from ..operators.dq import RARE_FREQ, ZSCORE
+
+    cols = df.columns
+    dep_pos = sorted({j for i in chunk for j in deps.get(i, [])})
+    # Keys are aliased apart from the aggregate inputs: in a grouping
+    # set a key reads NULL outside its own set, the inputs never do.
+    src = df.select(
+        *[F.col(cols[i]).alias(f"k{i}") for i in chunk],
+        *[F.col(c).alias(f"v{j}") for j, c in enumerate(cols)],
+    )
+    cube = src.groupingSets(
+        [[]] + [[f"k{i}"] for i in chunk], *[f"k{i}" for i in chunk]
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        *[F.count(f"v{i}").alias(f"nn{i}") for i in chunk],
+        *[F.min(f"v{j}").alias(f"lo{j}") for j in dep_pos],
+        *[F.max(f"v{j}").alias(f"hi{j}") for j in dep_pos],
+        *[F.avg(f"v{i}").alias(f"mu{i}") for i in chunk if i in numeric],
+        *[F.stddev(f"v{i}").alias(f"sd{i}") for i in chunk if i in numeric],
+        F.grouping_id().alias("gid"),
+    )
+    # gid has bit (m-1-p) set when the key at chunk position p is not
+    # grouped: the () row has every bit set, column p's set all but one.
+    m = len(chunk)
+    everything = (1 << m) - 1
+    top = cube.filter(F.col("gid") == everything).select(
+        F.col("n").alias("t_n"),
+        *[F.col(f"nn{i}").alias(f"t_nn{i}") for i in chunk],
+        *[F.col(f"mu{i}").alias(f"t_mu{i}") for i in chunk if i in numeric],
+        *[F.col(f"sd{i}").alias(f"t_sd{i}") for i in chunk if i in numeric],
+    )
+    aggs = [F.coalesce(F.max("t_n"), F.lit(0)).alias("n_all")]
+    for p, i in enumerate(chunk):
+        # a non-null group of column i's own set: one distinct value
+        group = (F.col("gid") == everything - (1 << (m - 1 - p))) & F.col(
+            f"k{i}"
+        ).isNotNull()
+        tot = F.col(f"t_nn{i}")
+        aggs += [
+            F.coalesce(F.max(tot), F.lit(0)).alias(f"nn{i}"),
+            F.count(F.when(group, 1)).alias(f"nd{i}"),
+        ]
+        if i in strings:
+            # CASE, not AND: ANSI division must never see an all-null
+            # column's zero total
+            rare = F.when(group, F.col("n") / tot < RARE_FREQ)
+            aggs.append(
+                F.coalesce(F.sum(F.when(rare, F.col("n")).otherwise(0)), F.lit(0))
+                .alias(f"rare{i}")
+            )
+        if i in numeric:
+            far = group & (
+                F.abs(F.col(f"k{i}") - F.col(f"t_mu{i}")) > ZSCORE * F.col(f"t_sd{i}")
+            )
+            aggs.append(
+                F.coalesce(F.sum(F.when(far, F.col("n")).otherwise(0)), F.lit(0))
+                .alias(f"far{i}")
+            )
+        for j in deps.get(i, []):
+            # min != max over the non-null dependents is exactly
+            # countDistinct > 1: both ignore NULLs and Spark orders and
+            # compares NaN = NaN and -0.0 = 0.0 the way grouping does
+            split = group & (F.col(f"lo{j}") != F.col(f"hi{j}"))
+            aggs.append(
+                F.coalesce(F.sum(F.when(split, 1).otherwise(0)), F.lit(0))
+                .alias(f"fd{i}_{j}")
+            )
+    return cube.crossJoin(F.broadcast(top)).agg(*aggs)
+
+
 def run_file_dq_distributed(
     df: DataFrame, max_pairs: int | None = None
-) -> list[dict[str, Any]]:
+) -> FileDQRules:
     """Five-pillar DQ sweep on a Spark DataFrame, returning the
     reference's flat rule-record shape (Data_Discovery_File.sql:217-313)
-    from the distributed rule engines — four aggregate-style jobs total
-    regardless of column count: one fused profiling pass serving both
-    completeness/uniqueness AND the z-score mean/std stats (they scan
-    the same rows), one outlier-count pass, one rare-value pass, one
-    FD pass.
+    from ONE collect over a value-count cube.
+
+    The cube is a grouping-sets aggregate: the ``()`` set (row count,
+    per-column non-null count, numeric mean/stddev) plus one set per
+    column whose groups are that column's distinct values with their
+    row count and, for every functional-dependency dependent, the
+    group's min/max. One global aggregate over the cube, cross-joined
+    with its broadcast ``()`` row (which the optimizer plans as a small
+    aggregate of its own over the same scan), derives every rule:
+    distinct count = the column's non-null groups; rare mass = Σ n over
+    groups below ``RARE_FREQ`` of the non-null count; z-score outliers
+    = Σ n over groups further than ``ZSCORE``·σ from the mean; pair
+    c1→c2 = the non-null c1 groups with ``min(c2) != max(c2)``.
+    Results match the per-family engines in operators/dq.py
+    (``zscore_accuracy_long``, ``rare_value_accuracy_long``,
+    ``fd_consistency_long``) rule for rule. Frames wider than Spark's grouping-set limit are cut into
+    chunks of ``_CUBE_KEYS`` key columns, one cube each, whose one-row
+    summaries cross-join into the same single collect.
 
     Validity is schema-level here: a typed DataFrame column cannot hold
     mixed types, so a column is valid iff its type maps into the
     palette (VARIANT → failed, mirroring the reference's "values must
     match the inferred type" intent on data Spark could not type).
+    The returned list carries the sweep's row count as ``row_count``.
     """
     from decimal import ROUND_HALF_UP, Decimal
 
-    from ..operators.dq import (
-        PASS_THRESHOLD,
-        fd_consistency_long,
-        rare_value_accuracy_long,
-        zscore_accuracy_long,
-    )
-    from ..operators.profile import is_numeric, profile_aggregates
+    from ..operators.dq import PASS_THRESHOLD
+    from ..operators.profile import is_numeric
 
     def _round6(x: float) -> float:
         # Spark's round() is HALF_UP; Python's round() is banker's —
         # match Spark so driver-side records agree with the engines.
         return float(Decimal(str(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
 
-    results: list[dict[str, Any]] = []
+    results = FileDQRules()
     schema = {f.name: f.dataType for f in df.schema.fields}
     cols = df.columns
+    pos = {c: i for i, c in enumerate(cols)}
+    pairs = [(c1, c2) for c1 in cols for c2 in cols if c1 != c2]
+    if max_pairs is not None:
+        pairs = pairs[:max_pairs]
+    deps: dict[int, list[int]] = {}
+    for c1, c2 in pairs:
+        deps.setdefault(pos[c1], []).append(pos[c2])
+    numeric = {i for i, c in enumerate(cols) if is_numeric(schema[c])}
+    strings = {i for i, c in enumerate(cols) if isinstance(schema[c], T.StringType)}
 
-    # Job 1 (fused): null/distinct counts + numeric mean/std in ONE pass.
-    prow = df.agg(*profile_aggregates(df, cols)).collect()[0]
-    total = float(max(int(prow["count_all"]), 1))
-    for c in cols:
-        completeness = (prow["count_all"] - prow[f"{c}__count_nulls"]) / total
-        uniqueness = prow[f"{c}__count_distinct"] / total
+    # max(…, 1): a zero-column frame still gets its () row count
+    summaries = [
+        _value_count_cube(
+            df, list(range(s, min(s + _CUBE_KEYS, len(cols)))), deps, numeric, strings
+        )
+        for s in range(0, max(len(cols), 1), _CUBE_KEYS)
+    ]
+    wide = summaries[0]
+    for part in summaries[1:]:
+        wide = wide.crossJoin(part)
+    # Accuracy results are rounded in Spark, as the per-family engines
+    # round them; completeness/uniqueness below round driver-side.
+    finals = []
+    for i in sorted(numeric):
+        tot = F.col(f"nn{i}")
+        result = F.when(tot > 0, 1.0 - F.col(f"far{i}") / tot.cast("double")).otherwise(
+            F.lit(1.0)
+        )
+        finals += [
+            F.round(result, 6).alias(f"z{i}"),
+            (result >= PASS_THRESHOLD).alias(f"z_ok{i}"),
+        ]
+    for i in sorted(strings):
+        tot = F.col(f"nn{i}")
+        result = F.when(
+            tot > 0, F.round(1.0 - F.col(f"rare{i}").cast("double") / tot, 6)
+        )
+        finals += [result.alias(f"r{i}"), (result >= PASS_THRESHOLD).alias(f"r_ok{i}")]
+    row = wide.select(*finals, "*").collect()[0]
+
+    results.row_count = int(row["n_all"])
+    total = float(max(results.row_count, 1))
+    for i, c in enumerate(cols):
+        completeness = row[f"nn{i}"] / total
+        uniqueness = row[f"nd{i}"] / total
         for pillar, result in (("completeness", completeness), ("uniqueness", uniqueness)):
             results.append(
                 {
@@ -242,61 +407,39 @@ def run_file_dq_distributed(
                 "status": "passed" if valid else "failed",
             }
         )
-    numeric_cols = [c for c, t in schema.items() if is_numeric(t)]
-    if numeric_cols:
-        stats = {
-            c: (
-                prow[f"{c}__avg"],
-                prow[f"{c}__stddev"],
-                int(prow["count_all"]) - int(prow[f"{c}__count_nulls"]),
-            )
-            for c in numeric_cols
-        }
-        # Job 2: outlier counting only — the stats job is fused above.
-        for row in zscore_accuracy_long(df, numeric_cols, stats=stats).collect():
-            results.append(
-                {
-                    "pillar": "accuracy",
-                    "column": row["column_name"],
-                    "result": float(row["result"]),
-                    "rule": f"Outlier check on {row['column_name']} (z-score > 3)",
-                    "status": row["status"],
-                }
-            )
-    string_cols = [c for c, t in schema.items() if isinstance(t, T.StringType)]
-    if string_cols:
-        for row in rare_value_accuracy_long(df, string_cols).collect():
-            results.append(
-                {
-                    "pillar": "accuracy",
-                    "column": row["column_name"],
-                    "result": float(row["result"]),
-                    "rule": f"Rare value check on {row['column_name']} (<1% frequency)",
-                    "status": row["status"],
-                }
-            )
-    # Job 4: FD sweep — pairs whose determinant the fused profile proved
-    # unique are emitted as literal passed rows (exact skip, no scan).
-    unique_cols = {
-        c
-        for c in cols
-        if int(prow[f"{c}__count_distinct"])
-        == int(prow["count_all"]) - int(prow[f"{c}__count_nulls"])
-    }
-    for row in fd_consistency_long(
-        df, max_pairs=max_pairs, known_unique_cols=unique_cols
-    ).collect():
+    for i in sorted(numeric):
+        results.append(
+            {
+                "pillar": "accuracy",
+                "column": cols[i],
+                "result": float(row[f"z{i}"]),
+                "rule": f"Outlier check on {cols[i]} (z-score > 3)",
+                "status": "passed" if row[f"z_ok{i}"] else "failed",
+            }
+        )
+    for i in sorted(strings):
+        if row[f"r{i}"] is None:
+            continue  # all-null column: no value frequencies to judge
+        results.append(
+            {
+                "pillar": "accuracy",
+                "column": cols[i],
+                "result": float(row[f"r{i}"]),
+                "rule": f"Rare value check on {cols[i]} (<1% frequency)",
+                "status": "passed" if row[f"r_ok{i}"] else "failed",
+            }
+        )
+    for c1, c2 in pairs:
+        bad = int(row[f"fd{pos[c1]}_{pos[c2]}"])
         results.append(
             {
                 "pillar": "consistency",
-                "column": row["pair"],
-                "result": float(row["result"]),
-                "rule": f"Functional dependency {row['pair']}",
-                "status": row["status"],
+                "column": f"{c1}->{c2}",
+                "result": 1.0 if bad == 0 else 0.0,
+                "rule": f"Functional dependency {c1}->{c2}",
+                "status": "passed" if bad == 0 else "failed",
             }
         )
-    # PASS_THRESHOLD re-exported for callers building summaries.
-    results_summary_threshold = PASS_THRESHOLD  # noqa: F841
     return results
 
 
@@ -325,9 +468,8 @@ def discover_and_run_dq(
     start = _dt.datetime.now(_dt.timezone.utc)
     try:
         df = read_any(spark, file_path, fmt=fmt)
-        row_count = df.count()
-        definition = file_metadata(file_path, df, row_count=row_count)
         rules = run_file_dq_distributed(df, max_pairs=max_pairs)
+        definition = file_metadata(file_path, df, row_count=rules.row_count)
         end = _dt.datetime.now(_dt.timezone.utc)
         return {
             "status": "SUCCESS",

@@ -37,3 +37,17 @@ def duck():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     yield con
     con.close()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """A plain run deselects the slow tier (pyproject ``addopts``); say
+    how much it skipped so the omission is never silent."""
+    slow = [
+        item
+        for item in terminalreporter.stats.get("deselected", [])
+        if item.get_closest_marker("slowtier")
+    ]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slowtier tests deselected; run them with: pytest -m slowtier"
+        )

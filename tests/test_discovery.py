@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -111,12 +112,11 @@ def test_discover_failure_envelope(spark):
 
 
 def test_file_dq_action_count(spark, sample_files, monkeypatch):
-    """The sweep must run exactly 4 collect actions regardless of
-    column count: fused profile (completeness/uniqueness + z-score
-    stats in ONE pass), outlier count, rare-value, FD — the unfused
-    version ran 5. (Raw Spark job ids are no proxy here: AQE
-    materializes one job per stage, so the count is counted at the
-    action boundary.)"""
+    """The sweep must run exactly 1 collect action regardless of
+    column count: every rule family comes from one value-count cube —
+    the per-family version ran 4. (Raw Spark job ids are no proxy
+    here: AQE materializes one job per stage, so the count is counted
+    at the action boundary.)"""
     from data_pipelines_snowflake_procedures_spark.sources.discovery import (
         run_file_dq_distributed,
     )
@@ -134,7 +134,22 @@ def test_file_dq_action_count(spark, sample_files, monkeypatch):
 
     monkeypatch.setattr(cls, "collect", counting_collect)
     run_file_dq_distributed(df)
-    assert len(calls) == 4, f"file-DQ sweep ran {len(calls)} actions, expected 4"
+    assert len(calls) == 1, f"file-DQ sweep ran {len(calls)} actions, expected 1"
+
+
+def test_file_metadata_sizes_spark_written_directory(spark, tmp_path):
+    """A Spark-written dataset directory reports the bytes of its data
+    files, not the directory inode; _SUCCESS and .crc files are not
+    data."""
+    path = str(tmp_path / "ds.parquet")
+    spark.range(500).repartition(3).write.parquet(path)
+    names = os.listdir(path)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    data = [n for n in names if n.startswith("part-")]
+    want = sum(os.path.getsize(os.path.join(path, n)) for n in data)
+    meta = file_metadata(path, read_any(spark, path), row_count=500)
+    assert meta["file_size"] == format_file_size(want)
+    assert meta["file_type"] == "parquet" and meta["row_count"] == 500
 
 
 def _write_xlsx_fixture(path: str) -> None:
